@@ -8,16 +8,30 @@ record_id).
 
 Scale posture: the dictionary is the build side of a broadcast hash join
 (MemStore analog, `lib/GtfsIndex.js:99-105`); the mention stream never
-shuffles for the exact pass. The fuzzy pass shuffles only *unmatched distinct
-surfaces* (tiny relative to mentions) against LSH band buckets.
+shuffles for the exact pass. The fuzzy pass has two implementations of one
+definition (3-gram 31-polynomial shingles, MinHash bands, hot-band cap,
+Jaccard threshold, highest-score-then-smallest-record_id winner):
+
+  * ``FuzzyDictionary`` + ``link_fuzzy`` — distributed: shuffles only the
+    *unmatched distinct surfaces* (tiny relative to mentions) against LSH
+    band buckets. Used when either side is too large for the driver.
+  * ``FuzzyIndex`` — driver-side: the same band buckets as sorted numpy
+    arrays, probed without a Spark job. Used when the dictionary and the
+    unmatched set are both small and already collected (the size-based
+    choice of "To Partition, or Not to Partition", SIGMOD 2021).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gtfsrt2lc_spark.functions.hashing import minhash_perms
+from gtfsrt2lc_spark.functions.hashing import MOD, minhash_perms
+
+_NGRAM = 3  # shingle width shared by both fuzzy implementations
 
 
 def resolve_dictionary(surfaces: DataFrame) -> DataFrame:
@@ -50,7 +64,7 @@ def link_exact(
     )
 
 
-def _shingle_hashes(col, n: int = 3):
+def _shingle_hashes(col, n: int = _NGRAM):
     """Closed-form 31-polynomial hash of each character n-gram.
 
     No nested aggregate per element (a fixed-width n-gram hash is
@@ -63,7 +77,7 @@ def _shingle_hashes(col, n: int = 3):
         h = F.lit(0).cast("long")
         for j, w in enumerate(weights):
             h = h + F.ascii(s.substr(i + j, F.lit(1))).cast("long") * F.lit(w)
-        return h % F.lit(2_147_483_647)
+        return h % F.lit(MOD)
 
     return F.array_distinct(
         F.transform(
@@ -88,7 +102,7 @@ def _prep_bands(
     )
     sigs = ex.groupBy(f"surface_{side}").agg(
         *[
-            F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(2_147_483_647)).alias(f"s{i}")
+            F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MOD)).alias(f"s{i}")
             for i, (a, b) in enumerate(perms)
         ],
     )
@@ -257,3 +271,145 @@ def link_fuzzy(
         .where(F.col("_rn") == 1)
         .select(F.col("surface_q").alias("surface"), "record_id", "score")
     )
+
+
+# ---- driver-side twin of FuzzyDictionary + link_fuzzy ----------------------
+
+# cell budget of one (strings x n-grams) int64 block in ``_signatures``
+_SIG_CELLS = 1 << 20
+
+
+def _gram_matrix(lowered: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """``_shingle_hashes`` of already-lowered strings, one row per string.
+
+    Returns the (strings x n-grams) int64 hash matrix and the mask of its
+    real cells. Spark reads a character past the end as ``ascii('') = 0``,
+    which is exactly the zero padding of a fixed-width UTF-32 array, and a
+    string shorter than one n-gram still yields one (padded) gram."""
+    lens = np.fromiter(map(len, lowered), np.int64, len(lowered))
+    n_grams = np.maximum(lens - (_NGRAM - 1), 1)
+    width = int(lens.max(initial=0)) + _NGRAM
+    cp = (
+        np.array(lowered, dtype=f"<U{width}")
+        .view(np.uint32)
+        .reshape(len(lowered), width)
+        .astype(np.int64)
+    )
+    g = int(n_grams.max(initial=1))
+    grams = sum(cp[:, j : j + g] * 31 ** (_NGRAM - 1 - j) for j in range(_NGRAM)) % MOD
+    return grams, np.arange(g) < n_grams[:, None]
+
+
+def _signatures(lowered: list[str], perms: list[tuple[int, int]]) -> np.ndarray:
+    """MinHash signature rows, ``(strings x perms)`` int64, as
+    ``_prep_bands`` aggregates them. Strings are processed shortest first
+    in blocks of at most ``_SIG_CELLS`` cells, so one long surface cannot
+    widen the whole dictionary's matrix."""
+    n = len(lowered)
+    sig = np.empty((n, len(perms)), np.int64)
+    lens = np.fromiter(map(len, lowered), np.int64, n)
+    order = np.argsort(lens, kind="stable")
+    start = 0
+    while start < n:
+        step = 4096  # halve until the block's widest (last) row fits
+        while step > 1 and step * (lens[order[min(start + step, n) - 1]] + _NGRAM) > _SIG_CELLS:
+            step //= 2
+        idx = order[start : start + step]
+        grams, valid = _gram_matrix([lowered[i] for i in idx])
+        for k, (a, b) in enumerate(perms):
+            # grams < 2^31 and a < 2^31: the product fits int64
+            sig[idx, k] = np.where(valid, (grams * a + b) % MOD, MOD).min(axis=1)
+        start += step
+    return sig
+
+
+def _band_keys(sig: np.ndarray, bands: int) -> list[np.ndarray]:
+    """One exact, sortable key per (string, band): the band's rows of
+    signature values viewed as a single fixed-width void scalar."""
+    rows = sig.shape[1] // bands
+    void = np.dtype((np.void, 8 * rows))
+    return [
+        np.ascontiguousarray(sig[:, bi * rows : (bi + 1) * rows]).view(void).ravel()
+        for bi in range(bands)
+    ]
+
+
+class FuzzyIndex:
+    """Driver-side MinHash-LSH index over a collected dictionary.
+
+    Links exactly as ``link_fuzzy(..., prepped=FuzzyDictionary(...))`` does
+    on the same dictionary and parameters — same shingles, permutations,
+    band keys, hot-band cap (``max_band_size``, applied to the same
+    per-band dictionary counts), Jaccard threshold and winner — but with
+    no Spark job and no scratch files: each band is a sorted key array
+    probed with ``searchsorted``.
+
+    Both sides arrive with Spark's ``lower`` of each surface, collected
+    next to it: the JVM's Unicode case tables are not Python's (they
+    disagree on code points added in later Unicode versions), so the
+    shingles must start from Spark's lowering, not ``str.lower``.
+    ``dictionary`` holds (lower(surface), record_id) pairs of the resolved
+    dictionary (``resolve_dictionary`` already applied, as KGPipeline's
+    ``_resolved_dictionary()`` collects it)."""
+
+    def __init__(
+        self,
+        dictionary: Iterable[tuple[str | None, str | None]],
+        n_hashes: int = 16,
+        bands: int = 8,
+        seed: int = 42,
+        max_band_size: int | None = 1000,
+    ) -> None:
+        self.bands = bands
+        self._perms = minhash_perms(n_hashes, seed=seed)
+        # a NULL surface never joins a shingle row in link_fuzzy
+        entries = [(low, rid) for low, rid in dictionary if low is not None]
+        self._lowered = [low for low, _ in entries]
+        self._records = [rid for _, rid in entries]
+        self._buckets: list[tuple[np.ndarray, np.ndarray]] = []  # (keys, rows)
+        for keys in _band_keys(_signatures(self._lowered, self._perms), bands):
+            rows = np.arange(len(keys))
+            if max_band_size is not None:
+                _, inv, counts = np.unique(keys, return_inverse=True, return_counts=True)
+                keep = counts[inv] <= max_band_size
+                keys, rows = keys[keep], rows[keep]
+            order = np.argsort(keys, kind="stable")
+            self._buckets.append((keys[order], rows[order]))
+
+    def link(
+        self,
+        surfaces: Iterable[tuple[str | None, str | None]],
+        jaccard_threshold: float = 0.5,
+    ) -> list[tuple[str, str | None, float]]:
+        """(surface, record_id, score) for each (surface, lower(surface))
+        query whose best candidate scores >= ``jaccard_threshold``: highest
+        score wins, then the smallest record_id (NULL first, as Spark sorts
+        it)."""
+        qs = sorted({(s, low) for s, low in surfaces if s is not None})
+        lowered = [low for _, low in qs]
+        cands: list[set[int]] = [set() for _ in qs]
+        for (keys, rows), qk in zip(
+            self._buckets, _band_keys(_signatures(lowered, self._perms), self.bands)
+        ):
+            lo = np.searchsorted(keys, qk, "left")
+            hi = np.searchsorted(keys, qk, "right")
+            for i in np.nonzero(hi > lo)[0]:
+                cands[i].update(rows[lo[i] : hi[i]].tolist())
+        out = []
+        for (q, low), cand in zip(qs, cands):
+            if not cand:
+                continue
+            ds = list(cand)
+            grams, valid = _gram_matrix([low] + [self._lowered[d] for d in ds])
+            sq, *sds = [set(g[m].tolist()) for g, m in zip(grams, valid)]
+            scored = []
+            for d, sd in zip(ds, sds):
+                inter = len(sq & sd)
+                score = inter / (len(sq) + len(sd) - inter)
+                if score >= jaccard_threshold:
+                    rid = self._records[d]
+                    scored.append((-score, rid is not None, rid or "", d))
+            if scored:
+                neg_score, _, _, d = min(scored)
+                out.append((q, self._records[d], -neg_score))
+        return out

@@ -33,6 +33,17 @@ from gtfsrt2lc_spark.functions.web import canonicalize_url
 from gtfsrt2lc_spark.operators.dedup import latest_by_key
 from gtfsrt2lc_spark.operators.linking import link_fuzzy
 
+# Largest unmatched-surface set that linked() fuzzy-links on the driver
+# (FuzzyIndex) rather than with the distributed link_fuzzy pass. The driver's
+# per-surface cost grows with the dictionary (more band candidates per
+# query), so the bound comes from the largest local dictionary
+# (max_local_dictionary's 2M default). Per batch against warm dictionary
+# tables on a 4-core local[4] host, the driver won at 5,000 surfaces for
+# every dictionary size measured (10k, 200k, 2M; at 2M 4.5-5.5 s vs
+# 6.4-6.7 s) and lost at 10,000 against the 2M one (9.5-9.9 s vs
+# 8.4-8.6 s); scripts/bench_fuzzy_crossover.py reproduces the table.
+_DRIVER_FUZZY_MAX = 5_000
+
 # a "mention" is a capitalized token span; predicates are a fixed phrase lexicon
 _MENTION = r"[A-Z][\w.]*(?: [A-Z][\w.]*)*"
 
@@ -93,12 +104,12 @@ class KGPipeline:
         # ``scratch_dir`` is any Hadoop-FS URI (run_incremental supplies an
         # out_dir-scoped one); the tempfile fallback is for local[*] only.
         self.scratch_dir = scratch_dir
-        # linked() resolves the surface->record mapping driver-side while the
-        # distinct surface set stays under this cap (the fast path: one tiny
-        # LocalRelation broadcast, zero broadcast-subplan recomputation), and
-        # falls back to a fully distributed mapping beyond it — at web scale
-        # the distinct capitalized-span set grows with the corpus and must
-        # never be collected. None = always local (tests/micro-batches).
+        # linked() collects the distinct UNMATCHED surface set and
+        # fuzzy-links it on the driver while it stays under this cap and
+        # under _DRIVER_FUZZY_MAX (past which the driver loses to Spark),
+        # and falls back to a fully distributed fuzzy mapping beyond it — at
+        # web scale the distinct capitalized-span set grows with the corpus
+        # and must never be collected. None = _DRIVER_FUZZY_MAX alone.
         self.max_local_surfaces = max_local_surfaces
         # The KB dictionary itself (surface -> record) is collected to the
         # driver and broadcast while it stays under THIS cap — the
@@ -112,8 +123,10 @@ class KGPipeline:
         self._canonical_map: DataFrame | None = None
         self._canonical_local = True
         self._dict_local: dict[str, str] | None = None
+        self._dict_lowered: list[tuple[str, str]] | None = None
         self._dict_over_cap = False
         self._fuzzy_dict = None
+        self._fuzzy_idx = None
         self._fact_udf = None
         self._scratch: list[tuple[str, bool]] = []  # (path, via_hadoop_fs)
         self._stage_seq = 0
@@ -305,7 +318,11 @@ class KGPipeline:
         if self._dict_local is None:
             from gtfsrt2lc_spark.operators.linking import resolve_dictionary
 
-            rd = resolve_dictionary(self.surfaces).select("surface", "record_id")
+            # lower(surface) rides along for the driver-side FuzzyIndex,
+            # whose shingles must start from Spark's case mapping
+            rd = resolve_dictionary(self.surfaces).select(
+                "surface", "record_id", F.lower("surface")
+            )
             if self.max_local_dictionary is None:
                 rows = rd.collect()
             else:
@@ -315,19 +332,37 @@ class KGPipeline:
                 if len(rows) > self.max_local_dictionary:
                     self._dict_over_cap = True
                     return None
-            self._dict_local = {r["surface"]: r["record_id"] for r in rows}
+            self._dict_local = {r[0]: r[1] for r in rows}
+            self._dict_lowered = [(r[2], r[1]) for r in rows]
         return self._dict_local
 
-    def _fuzzy_dictionary(self):
-        """Dictionary-side LSH tables, built ONCE per pipeline and staged.
+    def _fuzzy_index(self):
+        """Driver-side LSH index over the collected dictionary, built ONCE
+        per pipeline on the first dirty batch that takes the local fuzzy
+        path (``linked()``). It is a pure function of the static KB and
+        holds no scratch files, so ``cleanup()`` keeps it: every later
+        batch and ``run_incremental`` reuses it (the reference builds
+        indexes once and reuses them across polls, README.md:58)."""
+        if self._fuzzy_idx is None:
+            from gtfsrt2lc_spark.operators.linking import FuzzyIndex
 
-        The band and shingle tables are pure functions of the static KB;
-        a streaming loop hitting dirty micro-batches would otherwise
-        recompute the dictionary-side signature aggregation on every batch
-        (the reference builds indexes once and reuses them across polls,
-        README.md:58). Both frames are staged to scratch parquet so every
-        later fuzzy pass — and the two patch joins that consume it in the
-        same batch — scan a file instead of re-running the LSH subplan."""
+            self._fuzzy_idx = FuzzyIndex(
+                self._dict_lowered, max_band_size=self.fuzzy_max_band_size
+            )
+            self._dict_lowered = None  # the index holds its own copy
+        return self._fuzzy_idx
+
+    def _fuzzy_dictionary(self):
+        """Distributed dictionary-side LSH tables, built once and staged.
+
+        Only the over-cap paths use these: an unmatched set larger than
+        ``_DRIVER_FUZZY_MAX`` or ``max_local_surfaces`` (``linked()``) or a
+        dictionary larger than ``max_local_dictionary``
+        (``_linked_distributed``); under all of them ``_fuzzy_index`` links
+        on the driver instead. Both frames are staged
+        to scratch parquet so the fuzzy pass scans a file instead of
+        re-running the LSH subplan. ``cleanup()`` deletes the stages, so
+        the tables are rebuilt on the next over-cap batch."""
         if self._fuzzy_dict is None:
             from gtfsrt2lc_spark.operators.linking import FuzzyDictionary
 
@@ -368,14 +403,24 @@ class KGPipeline:
         before the dictionary cap), so the fuzzy probe job runs ONLY when
         the write proves unmatched surfaces exist (dirty corpora).
         fuzzy=False runs zero probe jobs. When unmatched surfaces exist,
-        the probe collects just the distinct unmatched set (bounded by
-        ``max_local_surfaces``; beyond it the fuzzy pass runs fully
-        distributed — web-scale corpora mint unbounded capitalized spans),
-        and the fuzzy mapping patches the NULL slots via coalesce.
+        the probe collects the distinct unmatched set, and the fuzzy
+        mapping patches the NULL slots via coalesce. The unmatched set's
+        size picks one of two fuzzy linkers with identical results:
 
-        Dictionary over the cap: the driver never sees it —
+        * at most ``_DRIVER_FUZZY_MAX`` surfaces (and ``max_local_surfaces``
+          when set lower), the dictionary being local on this path: the
+          driver-side ``FuzzyIndex`` (``_fuzzy_index``), built once per
+          pipeline from the collected dictionary — no Spark job, no
+          dictionary stage, kept across ``cleanup()``;
+        * larger sets (past the bound the driver loses to Spark, and
+          web-scale corpora mint unbounded capitalized spans): ``link_fuzzy``
+          runs fully distributed against the staged ``FuzzyDictionary``
+          (``_fuzzy_dictionary``).
+
+        Dictionary over ``max_local_dictionary``: the driver never sees it —
         ``_linked_distributed`` joins mentions to the distributed
-        dictionary relation instead (the 100x-KB path)."""
+        dictionary relation and always fuzzy-links distributed (the 100x-KB
+        path)."""
         spark = mentions.sparkSession
         # Fold the mention stream BEFORE the dictionary joins and the stage
         # write (guide §2.3 partial aggregation): group on the narrow
@@ -443,36 +488,29 @@ class KGPipeline:
             )
             .distinct()
         )
-        local: list[str] | None = None
-        if self.max_local_surfaces is None:
-            local = [r["surface"] for r in unmatched_df.collect()]
-        else:
-            # one job either way: the head IS the unmatched list when it
-            # fits, and the size probe when it doesn't
-            head = unmatched_df.limit(self.max_local_surfaces + 1).collect()
-            if len(head) <= self.max_local_surfaces:
-                local = [r["surface"] for r in head]
-        if local is not None:
-            fz_rows = []
-            if local:
-                fz_rows = [
-                    (r["surface"], r["record_id"])
-                    for r in link_fuzzy(
-                        spark.createDataFrame(
-                            [(s,) for s in local], "surface string"
-                        ),
-                        None,
-                        jaccard_threshold=self.fuzzy_threshold,
-                        prepped=self._fuzzy_dictionary(),
-                    ).collect()
-                ]
+        cap = _DRIVER_FUZZY_MAX
+        if self.max_local_surfaces is not None:
+            cap = min(cap, self.max_local_surfaces)
+        # one job either way: the head IS the unmatched list when it fits,
+        # and the size probe when it doesn't. lower(surface) rides along
+        # for the index's shingles.
+        head = (
+            unmatched_df.select("surface", F.lower("surface")).limit(cap + 1).collect()
+        )
+        if len(head) <= cap:
+            # both sides are on the driver: probe the driver-side index, no
+            # Spark job and no dictionary stage
+            fz_rows = [
+                (s, rid)
+                for s, rid, _ in self._fuzzy_index().link(head, self.fuzzy_threshold)
+            ]
             if not fz_rows:
                 return fully_linked  # nothing recoverable: unmatched rows drop
             fz = F.broadcast(
                 spark.createDataFrame(fz_rows, "surface string, record_id string")
             )
         else:
-            # unmatched set too large to collect: fuzzy-link it distributed
+            # unmatched set past the driver's bound: fuzzy-link it distributed
             # (banded MinHash-LSH, no all-pairs), staged once so both patch
             # joins scan parquet instead of recomputing the LSH plan.
             fz = self._stage(
@@ -590,7 +628,8 @@ class KGPipeline:
         """Remove scratch stage dirs created by linked().
 
         Hadoop-FS scratch paths delete through the FileSystem API (works on
-        HDFS/S3A/local alike); tempfile fallbacks through shutil."""
+        HDFS/S3A/local alike); tempfile fallbacks through shutil. The
+        driver-side ``FuzzyIndex`` holds no files and survives."""
         import shutil
 
         from gtfsrt2lc_spark.functions import hadoop_fs

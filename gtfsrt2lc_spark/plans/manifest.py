@@ -41,11 +41,17 @@ def _triples_path(out_dir: str) -> str:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The manifest rows of ``out_dir``; empty when no run has written one.
+
+    Only a missing manifest reads as empty. One that exists but cannot be
+    read raises: treating it as empty would silently re-process (and
+    re-append) every bucket."""
+    from gtfsrt2lc_spark.functions import hadoop_fs
+
     path = _manifest_path(out_dir)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
+    if not hadoop_fs.exists(spark, path):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:

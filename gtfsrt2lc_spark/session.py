@@ -13,9 +13,35 @@ Pinned defaults for determinism and scale-readiness:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+
+def default_driver_memory(mem_total_kib: int | None) -> str:
+    """Driver heap for a host with ``mem_total_kib`` of physical memory:
+    about 40% of it in whole GiB (at least 1g), capped at 16g. The JVM's
+    RSS runs well above its heap (off-heap buffers, metaspace, Python
+    workers beside it), so a heap near the host's RAM gets the JVM
+    OOM-killed. ``None`` (size unknown) keeps the 16g cap."""
+    if mem_total_kib is None:
+        return "16g"
+    return f"{max(1, min(16, int(mem_total_kib * 0.4) // (1 << 20)))}g"
+
+
+def _mem_total_kib() -> int | None:
+    """``MemTotal`` from /proc/meminfo; None where it is unavailable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
 
 
 def get_spark(
@@ -28,7 +54,8 @@ def get_spark(
     """Build (or fetch) the session. Env overrides:
 
     SPARK_GRAFT_CPUS   -> local[N] parallelism (default local[*])
-    SPARK_GRAFT_DRIVER_MEM -> driver memory (default 16g)
+    SPARK_GRAFT_DRIVER_MEM -> driver memory (default: ``default_driver_memory``
+                              of the host's MemTotal, logged at INFO)
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -37,7 +64,10 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else 32
     if driver_memory is None:
-        driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        if driver_memory is None:
+            driver_memory = default_driver_memory(_mem_total_kib())
+            log.info("spark.driver.memory=%s (sized from host memory)", driver_memory)
 
     builder = (
         SparkSession.builder.master(master)

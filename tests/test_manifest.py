@@ -168,3 +168,24 @@ def test_triple_write_one_file_per_bucket(spark, corpus_dfs, tmp_path_factory):
     for d in part_dirs:
         files = [f for f in os.listdir(os.path.join(tdir, d)) if f.startswith("part-")]
         assert len(files) <= 2, f"{d} has {len(files)} files (write not clustered)"
+
+
+def test_unreadable_manifest_raises(spark, corpus_dfs, pipeline, tmp_path):
+    """A missing manifest reads as empty; one that exists but cannot be
+    read raises instead of reading as empty, which would silently
+    re-process and re-append every bucket."""
+    import os
+
+    out = str(tmp_path / "kg_out_corrupt")
+    assert read_manifest(spark, out).count() == 0  # missing: nothing done yet
+
+    # a manifest directory Spark cannot list: two conflicting partition
+    # layouts under one path
+    mf = os.path.join(out, "_manifest")
+    spark.createDataFrame([(1,)], "x int").write.parquet(f"{mf}/a=1")
+    spark.createDataFrame([(1,)], "x int").write.parquet(f"{mf}/b=2")
+    with pytest.raises(Exception, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+        read_manifest(spark, out)
+    with pytest.raises(Exception, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+        run_incremental(spark, corpus_dfs[0], pipeline, out, n_buckets=4, run_id="rc")
+    assert not os.path.exists(os.path.join(out, "triples"))  # nothing re-processed

@@ -248,10 +248,10 @@ def test_link_fuzzy_prepped_equivalence(spark, corpus_dfs, corpus):
 
 
 def test_fuzzy_dictionary_reused_across_batches(spark, corpus_dfs, result_triples):
-    """Two dirty micro-batches through ONE pipeline build the dictionary-side
-    LSH tables exactly once (the reference's index-reuse pattern): the second
-    batch adds only its own stage checkpoint, results stay golden, and
-    cleanup() invalidates the cache with the staged parquet."""
+    """Two dirty micro-batches through ONE pipeline build the driver-side
+    fuzzy index exactly once (the reference's index-reuse pattern): each
+    batch stages only its own mentions (0 dictionary stages), the results
+    stay golden, and cleanup() keeps the index, which holds no files."""
     pages, records, surfaces, sameas = corpus_dfs
     preds = {phrase: local for phrase, (local, _, _) in PREDICATES.items()}
     dirty, extra = _dirty_pages(spark, pages)
@@ -260,15 +260,69 @@ def test_fuzzy_dictionary_reused_across_batches(spark, corpus_dfs, result_triple
         got1 = {
             (r["subj"], r["pred"], r["obj"]) for r in pipe.triples(dirty).collect()
         }
+        idx = pipe._fuzzy_idx
+        assert idx is not None  # dirty batch engaged the fuzzy pass
+        assert pipe._fuzzy_dict is None  # no distributed dictionary tables
+        assert len(pipe._scratch) == 1  # batch 1's mention stage only
+        pipe.cleanup()
+        assert pipe._fuzzy_idx is idx  # survives cleanup
+        got2 = {
+            (r["subj"], r["pred"], r["obj"]) for r in pipe.triples(dirty).collect()
+        }
+        assert pipe._fuzzy_idx is idx  # built once, reused
+        assert pipe._fuzzy_dict is None
+        assert len(pipe._scratch) == 1  # batch 2's mention stage only
+        assert got1 == got2 == result_triples | extra
+    finally:
+        pipe.cleanup()
+    assert pipe._fuzzy_idx is idx
+
+
+def test_staged_fuzzy_dictionary_reused_across_batches(spark, corpus_dfs, result_triples):
+    """The over-cap twin of the test above: with max_local_surfaces=0 both
+    dirty batches fuzzy-link distributed against the staged
+    FuzzyDictionary, which is staged once and reused (batch 2 stages only
+    its mentions and its fuzzy mapping, no dictionary tables), and
+    cleanup() resets it together with the parquet it points at."""
+    pages, records, surfaces, sameas = corpus_dfs
+    preds = {phrase: local for phrase, (local, _, _) in PREDICATES.items()}
+    dirty, extra = _dirty_pages(spark, pages)
+    pipe = KGPipeline(records, surfaces, sameas, preds, max_local_surfaces=0)
+    try:
+        got1 = {
+            (r["subj"], r["pred"], r["obj"]) for r in pipe.triples(dirty).collect()
+        }
         fd = pipe._fuzzy_dict
-        assert fd is not None  # dirty batch engaged the fuzzy pass
-        n_stages = len(pipe._scratch)
+        assert fd is not None  # dirty batch engaged the distributed pass
+        assert pipe._fuzzy_idx is None  # the driver-side index never ran
+        # mentions + 2 dictionary tables + fuzzy mapping
+        assert len(pipe._scratch) == 4
         got2 = {
             (r["subj"], r["pred"], r["obj"]) for r in pipe.triples(dirty).collect()
         }
         assert pipe._fuzzy_dict is fd  # built once, reused
-        assert len(pipe._scratch) == n_stages + 1  # only batch 2's own stage
+        assert len(pipe._scratch) == 4 + 2  # batch 2: mentions + fuzzy mapping
         assert got1 == got2 == result_triples | extra
     finally:
         pipe.cleanup()
     assert pipe._fuzzy_dict is None  # staged tables gone -> cache reset
+
+
+def test_driver_fuzzy_bound_routes_large_unmatched_sets_distributed(
+    spark, corpus_dfs, result_triples, monkeypatch
+):
+    """An unmatched set over _DRIVER_FUZZY_MAX takes the distributed pass
+    even when max_local_surfaces would let it be collected."""
+    from gtfsrt2lc_spark.plans import kg_pipeline
+
+    pages, records, surfaces, sameas = corpus_dfs
+    preds = {phrase: local for phrase, (local, _, _) in PREDICATES.items()}
+    dirty, extra = _dirty_pages(spark, pages)
+    monkeypatch.setattr(kg_pipeline, "_DRIVER_FUZZY_MAX", 1)
+    pipe = KGPipeline(records, surfaces, sameas, preds, max_local_surfaces=None)
+    try:
+        got = {(r["subj"], r["pred"], r["obj"]) for r in pipe.triples(dirty).collect()}
+        assert pipe._fuzzy_dict is not None and pipe._fuzzy_idx is None
+        assert got == result_triples | extra
+    finally:
+        pipe.cleanup()

@@ -145,13 +145,18 @@ def test_streaming_kg_pipeline_matches_batch(spark, corpus_dfs, tmp_path):
         pipe.cleanup()
 
 
-def test_streaming_dirty_batches_reuse_fuzzy_dictionary(spark, corpus_dfs, tmp_path):
+def test_streaming_dirty_batches_reuse_fuzzy_dictionary(
+    spark, corpus_dfs, tmp_path, monkeypatch
+):
     """Two dirty micro-batches (each with out-of-dictionary typo'd surfaces)
-    stream through ONE pipeline: the dictionary-side LSH tables are staged
-    exactly once across the whole stream (2 dict stages + 1 mention stage
-    per batch — a per-batch rebuild would add 2 more), and the streamed
-    triple set equals the batch pipeline over the same dirty corpus."""
+    stream through ONE pipeline: the driver-side fuzzy index is built
+    exactly once across the whole stream and survives cleanup(), each batch
+    stages only its mentions (0 dictionary stages, 1 mention stage per
+    batch), and the streamed triple set equals the batch pipeline over the
+    same dirty corpus."""
     from datetime import datetime
+
+    from gtfsrt2lc_spark.operators import linking
 
     from gtfsrt2lc_spark.fixtures.pages import PREDICATES, _render_page
     from gtfsrt2lc_spark.plans.kg_pipeline import KGPipeline
@@ -198,6 +203,14 @@ def test_streaming_dirty_batches_reuse_fuzzy_dictionary(spark, corpus_dfs, tmp_p
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
+    builds = []
+    real_init = linking.FuzzyIndex.__init__
+
+    def counting_init(self, *args, **kwargs):
+        builds.append(1)
+        real_init(self, *args, **kwargs)
+
+    monkeypatch.setattr(linking.FuzzyIndex, "__init__", counting_init)
     pipe = KGPipeline(records, surfaces, sameas, preds)
     try:
         q = stream_pages_to_triples(
@@ -211,8 +224,11 @@ def test_streaming_dirty_batches_reuse_fuzzy_dictionary(spark, corpus_dfs, tmp_p
             .select("subj", "pred", "obj").collect()
         }
         assert got == want and len(got) > 0
-        assert pipe._fuzzy_dict is not None  # both batches were dirty
-        # 2 batches x 1 mention stage + 2 one-time dictionary stages
-        assert len(pipe._scratch) == 4
+        idx = pipe._fuzzy_idx
+        assert idx is not None  # both batches were dirty
+        assert len(builds) == 1  # built once for the whole stream
+        assert pipe._fuzzy_dict is None  # 0 dictionary stages
+        assert len(pipe._scratch) == 2  # 2 batches x 1 mention stage
     finally:
         pipe.cleanup()
+    assert pipe._fuzzy_idx is idx  # holds no files: cleanup() keeps it
